@@ -77,7 +77,9 @@ object StagingScope {
   /** Directory for `reliable` mode's checkpoint files (set once per
     * SparkContext on first use; on a cluster this must be distributed
     * storage). Defaults to a fresh temp dir — fine in local mode,
-    * wrong on a cluster, hence the conf.
+    * wrong on a cluster, hence the conf. Setting it to a different dir
+    * after the SparkContext has one refuses by name instead of
+    * checkpointing somewhere the conf does not say.
     */
   val DirKey = "graft.staging.dir"
 
@@ -95,12 +97,22 @@ object StagingScope {
       case "off" => df
       case "reliable" =>
         val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty) synchronized {
-          if (sc.getCheckpointDir.isEmpty) {
-            val dir = spark.conf.get(DirKey,
-              java.nio.file.Files
-                .createTempDirectory("graft-staging-").toString)
-            sc.setCheckpointDir(dir)
+        val wanted = spark.conf.getOption(DirKey)
+        synchronized {
+          sc.getCheckpointDir match {
+            case None =>
+              sc.setCheckpointDir(wanted.getOrElse(
+                java.nio.file.Files.createTempDirectory("graft-staging-").toString))
+            // setCheckpointDir files checkpoints under a fresh subdir
+            // of the dir it was given
+            case Some(cur) => wanted.foreach { w =>
+              val p = new org.apache.hadoop.fs.Path(w)
+              val dir = p.getFileSystem(sc.hadoopConfiguration).makeQualified(p)
+              if (new org.apache.hadoop.fs.Path(cur).getParent != dir)
+                throw new IllegalStateException(
+                  s"$DirKey=$w, but this SparkContext already checkpoints " +
+                    s"to $cur; a SparkContext has one checkpoint dir")
+            }
           }
         }
         register(df.checkpoint(eager = eager))

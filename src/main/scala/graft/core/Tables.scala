@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table registry over the driver-generated parquet test tables
   * (TESTDATA.md). In the reference every pipeline starts from a named
@@ -8,6 +10,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * here every query starts from a named parquet table. At cluster scale
   * these would be partitioned/bucketed managed tables — the accessors
   * keep that swap in one place.
+  *
+  * ==Resolution memo==
+  * A pipeline loads the same few tables again and again (an ETL pass
+  * makes 18 loads of 4 tables), and a bare `spark.read.parquet` pays
+  * for each one: a schema-inference Spark job (≈90–100 ms warm) plus,
+  * in [[load]], a physical plan compiled only to read the scan's
+  * partition count. Both answers depend only on the files and on a few
+  * session confs, so they are memoized per path: the raw parquet
+  * schema and [[load]]'s fan-out decision. An entry is valid for a
+  * [[Stamp]] — the data files' (name, length, mtime) from one Hadoop
+  * listing, the confs that schema inference, file splitting and the
+  * size estimate read (`spark.sql.parquet.*`,
+  * `spark.sql.legacy.parquet.*`, `spark.sql.files.*`,
+  * `spark.sql.caseSensitive`, `spark.sql.sources.fileCompressionFactor`,
+  * `spark.sql.leafNodeDefaultParallelism`) and `defaultParallelism`;
+  * a rewritten file or a changed conf re-probes and replaces the
+  * path's entry. A hit starts no Spark job: it reads with the known
+  * schema. Every call still returns a FRESH relation (new attribute
+  * IDs), never a cached DataFrame, so a query that loads one table
+  * twice self-joins unambiguously. Probes run outside the memo's lock,
+  * so concurrent queries never wait on each other's jobs; two racing
+  * misses both probe and the later write wins (both are valid).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -33,8 +57,62 @@ object Tables {
     }.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast(TimestampType)))
   }
 
+  /** What a memo entry is valid for (see the object doc). */
+  private final case class Stamp(
+      files: Seq[(String, Long, Long)], confs: Seq[(String, String)], parallelism: Int)
+
+  private final case class Probe(stamp: Stamp, schema: StructType, fanOut: Option[Boolean])
+
+  private val ProbeConfs = Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.",
+    "spark.sql.files.", "spark.sql.caseSensitive",
+    "spark.sql.sources.fileCompressionFactor", "spark.sql.leafNodeDefaultParallelism")
+
+  /** One entry per path, least recently used evicted past the cap —
+    * staged stream slices live under fresh temp dirs, so the path set
+    * is not bounded by the table registry alone.
+    */
+  private val probes = new java.util.LinkedHashMap[String, Probe](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Probe]): Boolean =
+      size > 256
+  }
+
+  private def stamp(spark: SparkSession, path: String): Stamp = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing path stamps empty and fails in the probe with Spark's own error
+    val files = (try fs.listStatus(p).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    val confs = spark.conf.getAll.toSeq
+      .filter { case (k, _) => ProbeConfs.exists(k.startsWith) }.sorted
+    Stamp(files, confs, spark.sparkContext.defaultParallelism)
+  }
+
+  private def remember(path: String, probe: Probe): Probe =
+    probes.synchronized { probes.put(path, probe); probe }
+
+  private def probe(spark: SparkSession, path: String): Probe = {
+    val st = stamp(spark, path)
+    probes.synchronized(Option(probes.get(path))).filter(_.stamp == st)
+      .getOrElse(remember(path, Probe(st, spark.read.parquet(path).schema, None)))
+  }
+
+  /** The raw parquet schema of a file or a directory of files —
+    * inferred once per [[Stamp]], then served from the memo. The one
+    * way engine code resolves a parquet schema.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType =
+    probe(spark, path).schema
+
+  /** A raw parquet read (no canonicalization, no fan-out) that skips
+    * schema inference on a memo hit.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = canonicalizeTimestamps(spark.read.parquet(s"$dir/$name.parquet"))
+    val path = s"$dir/$name.parquet"
+    val p = probe(spark, path)
+    val df = canonicalizeTimestamps(spark.read.schema(p.schema).parquet(path))
     // Single-file, single-ROW-GROUP parquet (the test harness's layout;
     // verified with pyarrow) is unsplittable: the scan yields ONE
     // partition regardless of core count, so every per-row kernel and
@@ -46,13 +124,16 @@ object Tables {
     // On a real cluster reading many splits (parts >= cores) this is a
     // no-op — it exists to make local single-file inputs behave like
     // the many-split layout a deployment would have.
-    val target = spark.sparkContext.defaultParallelism
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    // toRdd, not .rdd: the partition-count probe must not compile a
-    // second Row-deserializing physical plan just to read a number
-    if (bytes > (64L << 10) && df.queryExecution.toRdd.getNumPartitions < target)
-      df.repartition(target)
-    else df
+    val target = p.stamp.parallelism
+    val fanOut = p.fanOut.getOrElse {
+      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      // toRdd, not .rdd: the partition-count probe must not compile a
+      // second Row-deserializing physical plan just to read a number
+      val f = bytes > (64L << 10) && df.queryExecution.toRdd.getNumPartitions < target
+      remember(path, p.copy(fanOut = Some(f)))
+      f
+    }
+    if (fanOut) df.repartition(target) else df
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -76,15 +76,7 @@ object StreamBm25 {
     // for the stream's lifetime
     built.releaseStaged()
 
-    val schema = {
-      import scala.jdk.CollectionConverters._
-      val first = scala.util.Using.resource(Files.list(dir)) { l =>
-        l.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no staged query slices under $dir"))
-      }
-      s.read.parquet(first.toString).schema
-    }
+    val schema = graft.core.Tables.parquetSchema(s, dir.toString)
     val stream = s.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)

@@ -125,7 +125,7 @@ object StreamGate {
     */
   def streamEvents(s: SparkSession, dir: Path): Dataset[Event] = {
     import s.implicits._
-    val schema = s.read.parquet(dir.resolve("00_events.parquet").toString).schema
+    val schema = graft.core.Tables.parquetSchema(s, dir.resolve("00_events.parquet").toString)
     s.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)
@@ -262,15 +262,7 @@ object StreamGate {
       .localCheckpoint(false))
     // probe any staged slice for the schema (slice 0 may be empty and
     // therefore unstaged — slice membership is content-hashed)
-    val schema = {
-      import scala.jdk.CollectionConverters._
-      val first = scala.util.Using.resource(Files.list(dir)) { l =>
-        l.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no staged doc slices under $dir"))
-      }
-      s.read.parquet(first.toString).schema
-    }
+    val schema = graft.core.Tables.parquetSchema(s, dir.toString)
     val stream = s.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)

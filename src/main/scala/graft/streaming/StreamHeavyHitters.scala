@@ -107,15 +107,7 @@ object StreamHeavyHitters {
     val docs = graft.core.Tables.documents(s, d)
     val dir = StreamGate.stageSlices(
       docs.select("doc_id", "text"), col("doc_id"), slices, "hhdocs")
-    val schema = {
-      import scala.jdk.CollectionConverters._
-      val first = scala.util.Using.resource(java.nio.file.Files.list(dir)) { l =>
-        l.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no staged doc slices under $dir"))
-      }
-      s.read.parquet(first.toString).schema
-    }
+    val schema = graft.core.Tables.parquetSchema(s, dir.toString)
     val stream = s.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)

@@ -56,15 +56,7 @@ object StreamIndexIngest {
     val docs = graft.core.Tables.documents(s, d)
     val dir = StreamGate.stageSlices(docs, col("doc_id"), slices, "ingest")
 
-    val schema = {
-      import scala.jdk.CollectionConverters._
-      val first = scala.util.Using.resource(Files.list(dir)) { l =>
-        l.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no staged doc slices under $dir"))
-      }
-      s.read.parquet(first.toString).schema
-    }
+    val schema = graft.core.Tables.parquetSchema(s, dir.toString)
     val stream = s.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)

@@ -46,7 +46,7 @@ object BulkProbeAudit {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = graft.core.Tables.readParquet(spark, s"$sfDir/embeddings.parquet")
     val n = emb.count()
     val stride = math.max(1L, n / nLists)
     val seeds: Array[(Int, Array[Double])] = emb

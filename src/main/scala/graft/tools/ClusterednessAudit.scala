@@ -42,7 +42,7 @@ object ClusterednessAudit {
     cases.foreach { c =>
       val Array(dir, t) = c.split(":")
       val threshold = t.toDouble
-      val df = spark.read.parquet(s"$dir/embeddings.parquet")
+      val df = graft.core.Tables.readParquet(spark, s"$dir/embeddings.parquet")
       SimilarityGuard.lastClusterednessWarning = None
       SimilarityGuard.lastClusterednessSurvival = None
       val t0 = System.nanoTime()

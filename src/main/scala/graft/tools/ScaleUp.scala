@@ -32,7 +32,7 @@ object ScaleUp {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = graft.core.Tables.readParquet(spark, s"$src/$t.parquet")
     // the driver's layout is ONE parquet FILE per table (and the DuckDB
     // oracle harness reads them as files): stage the write, move the
     // single part file into place

@@ -48,6 +48,20 @@ class LintSpec extends AnyFunSuite {
     assert(hits.isEmpty, "use queryExecution.toRdd instead:\n" + hits.mkString("\n"))
   }
 
+  test("one way to resolve a parquet schema: no .read.parquet( in src/main " +
+      "outside Tables and Staging (a bare read pays a schema-inference " +
+      "Spark job per call; Tables memoizes it)") {
+    val allow = Set("Tables.scala", "Staging.scala")
+    val hits = for {
+      (p, src) <- mainSources
+      if !allow.contains(p.getFileName.toString)
+      (ln, line) <- codeLines(src)
+      if line.contains(".read.parquet(")
+    } yield s"$p:$ln: ${line.trim}"
+    assert(hits.isEmpty,
+      "use Tables.parquetSchema / Tables.readParquet instead:\n" + hits.mkString("\n"))
+  }
+
   test("no ??? stubs anywhere in src/main") {
     val hits = for {
       (p, src) <- mainSources

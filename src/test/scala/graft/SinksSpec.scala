@@ -36,6 +36,24 @@ class SinksSpec extends SparkSpec {
     // upsert does per _id.
   }
 
+  test("upsertByKey writes at most one file per bucket per write") {
+    val path = tmpDir() + "/b"
+    def dataFiles(): Map[String, Int] = {
+      import scala.jdk.CollectionConverters._
+      scala.util.Using.resource(Files.walk(java.nio.file.Paths.get(path))) { w =>
+        w.iterator().asScala.toList
+          .filter(f => f.getFileName.toString.endsWith(".parquet"))
+          .groupBy(_.getParent.getFileName.toString).map { case (b, fs) => b -> fs.size }
+      }
+    }
+    // 8 input partitions, every one holding keys of every bucket
+    val df = (0L until 4000L).toDF("id").withColumn("v", col("id") * 2).repartition(8)
+    Sinks.upsertByKey(df, path, "id", nBuckets = 16)
+    val files = dataFiles()
+    assert(files.size == 16 && files.values.forall(_ == 1), s"files per bucket: $files")
+    assert(spark.read.parquet(path).count() == 4000L)
+  }
+
   test("jsonl sink drops null fields") {
     val path = tmpDir() + "/j"
     Sinks.writeJsonl(Seq(("a", Option.empty[String], 1L)).toDF("id", "desc", "n"), path)

@@ -48,10 +48,14 @@ class StagingScopeSpec extends SparkSpec {
     assert(eventuallyFreed(ckpt))
   }
 
+  // one dir for every reliable-mode case: a SparkContext has one
+  // checkpoint dir, and a different graft.staging.dir refuses
+  private lazy val reliableDir =
+    java.nio.file.Files.createTempDirectory("graft-reliable-").toString
+
   test("reliable mode: stage survives via checkpoint files, results equal") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-")
     spark.conf.set(StagingScope.ModeKey, "reliable")
-    spark.conf.set(StagingScope.DirKey, dir.toString)
+    spark.conf.set(StagingScope.DirKey, reliableDir)
     try {
       val df = (1L to 200L).toDF("id")
         .groupBy(pmod(col("id"), lit(7)).as("g")).agg(count(lit(1)).as("n"))
@@ -90,15 +94,35 @@ class StagingScopeSpec extends SparkSpec {
     val local = run()
     spark.conf.set(StagingScope.ModeKey, "off")
     val off = try run() finally spark.conf.unset(StagingScope.ModeKey)
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-")
     spark.conf.set(StagingScope.ModeKey, "reliable")
-    spark.conf.set(StagingScope.DirKey, dir.toString)
+    spark.conf.set(StagingScope.DirKey, reliableDir)
     val reliable = try run() finally {
       spark.conf.unset(StagingScope.ModeKey)
       spark.conf.unset(StagingScope.DirKey)
     }
     assert(off == local && reliable == local)
     StagingScope.drain()
+  }
+
+  test("reliable mode refuses by name a staging dir that differs from " +
+      "the SparkContext's checkpoint dir (instead of ignoring the conf)") {
+    spark.conf.set(StagingScope.ModeKey, "reliable")
+    try {
+      spark.conf.set(StagingScope.DirKey, reliableDir)
+      StagingScope.stage(Seq(1).toDF("x")) // sets the dir if no case has yet
+      spark.conf.set(StagingScope.DirKey,
+        java.nio.file.Files.createTempDirectory("graft-other-").toString)
+      val e = intercept[IllegalStateException] {
+        StagingScope.stage(Seq(2).toDF("x"))
+      }
+      assert(e.getMessage.contains(StagingScope.DirKey))
+      spark.conf.set(StagingScope.DirKey, reliableDir)
+      assert(StagingScope.stage(Seq(3).toDF("x")).collect().map(_.getInt(0)).toSeq == Seq(3),
+        "the dir the SparkContext already uses must still be accepted")
+    } finally {
+      spark.conf.unset(StagingScope.ModeKey)
+      spark.conf.unset(StagingScope.DirKey)
+    }
   }
 
   test("unknown mode refuses by name") {

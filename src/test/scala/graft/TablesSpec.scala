@@ -54,6 +54,99 @@ class TablesSpec extends SparkSpec {
     "embeddings" -> Seq("vec_id" -> LongType,
       "embedding" -> ArrayType(FloatType), "label" -> IntegerType))
 
+  /** Spark jobs started by `body` on this thread, and its value. */
+  private def jobsOf[T](body: => T): (Int, T) = {
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("tablesSpec.probe") == tag)
+          n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    sc.setLocalProperty("tablesSpec.probe", tag)
+    try {
+      val v = body
+      org.apache.spark.ListenerBusHook.drain(sc)
+      (n.get, v)
+    } finally {
+      sc.setLocalProperty("tablesSpec.probe", null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  /** A one-file table under a fresh dir, big enough (≈3 MB, one split)
+    * that [[Tables.load]] fans it out.
+    */
+  private def tmpTable(extra: String*): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    spark.range(0, 50000).selectExpr(Seq("id", "sha2(cast(id as string), 256) as h") ++ extra: _*)
+      .coalesce(1).write.parquet(s"$dir/t.parquet")
+    dir
+  }
+
+  private def fanOut(df: org.apache.spark.sql.DataFrame): Option[Int] =
+    df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r.numPartitions
+    }
+
+  test("a memo hit starts no Spark job and resolves like the cold load") {
+    val dir = tmpTable("cast(timestamp_micros(id) as timestamp_ntz) as t")
+    val (coldJobs, cold) = jobsOf(Tables.load(spark, dir, "t"))
+    val (hitJobs, hit) = jobsOf(Tables.load(spark, dir, "t"))
+    assert(coldJobs > 0, "the cold load must infer the schema")
+    assert(hitJobs == 0, s"a memo hit started $hitJobs Spark jobs")
+    assert(hit.schema == cold.schema && hit.schema("t").dataType == TimestampType)
+    assert(fanOut(cold) == Some(spark.sparkContext.defaultParallelism))
+    assert(fanOut(hit) == fanOut(cold))
+    assert(hit.collect().toSet == cold.collect().toSet)
+  }
+
+  test("rewriting a table file (new length or new mtime) infers again") {
+    val dir = tmpTable()
+    Tables.load(spark, dir, "t")
+    spark.range(0, 10).selectExpr("id", "'x' as h", "id * 2 as extra")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val (jobs, df) = jobsOf(Tables.load(spark, dir, "t"))
+    assert(jobs > 0 && df.columns.toSeq == Seq("id", "h", "extra"),
+      s"stale schema after a rewrite: ${df.columns.mkString(",")}")
+    assert(fanOut(df).isEmpty, "a 10-row table must not fan out")
+    import scala.jdk.CollectionConverters._
+    val part = scala.util.Using.resource(
+      java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/t.parquet"))) {
+      _.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+    }
+    java.nio.file.Files.setLastModifiedTime(part, java.nio.file.attribute.FileTime
+      .fromMillis(java.nio.file.Files.getLastModifiedTime(part).toMillis + 60000L))
+    assert(jobsOf(Tables.load(spark, dir, "t"))._1 > 0, "a touched file must re-probe")
+    assert(jobsOf(Tables.load(spark, dir, "t"))._1 == 0)
+  }
+
+  test("changing spark.sql.legacy.parquet.nanosAsLong changes the memo key") {
+    val dir = tmpTable()
+    Tables.load(spark, dir, "t")
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, (!before.contains("true")).toString)
+    try assert(jobsOf(Tables.load(spark, dir, "t"))._1 > 0)
+    finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("two loads of one table in one query are distinct relations " +
+      "(a self-join resolves without an ambiguity error)") {
+    val dir = tmpTable()
+    val a = Tables.load(spark, dir, "t")
+    val b = Tables.load(spark, dir, "t")
+    assert(a.queryExecution.analyzed.output.map(_.exprId).toSet
+      .intersect(b.queryExecution.analyzed.output.map(_.exprId).toSet).isEmpty)
+    val j = a.join(b, a("id") === b("id") + 1)
+    assert(j.count() == 49999L)
+  }
+
   test("post-adapter schemas match the canonical contract at every SF") {
     assert(sfDirs.nonEmpty, "no /root/testdata sf dirs found")
     assert(canonical.keySet == Tables.names.toSet,

@@ -66,6 +66,36 @@ class TopKSpec extends SparkSpec {
     }
   }
 
+  test("a NaN score ranks above every number (Spark SQL's order) in the " +
+      "native aggregate and the typed Aggregator alike, in any arrival order") {
+    import org.apache.spark.sql.functions._
+    val rows = Seq((1, 1L, Double.NaN), (1, 2L, 3.0), (1, 3L, 7.0), (1, 4L, Double.NaN),
+      (1, 5L, 5.0), (2, 6L, 1.0), (2, 7L, Double.NaN))
+    // NaN != NaN, so compare scores by their bits
+    def key(g: Int, pos: Int, id: Long, sc: Double) =
+      (g, pos, id, java.lang.Double.doubleToLongBits(sc))
+    val want = Set(key(1, 0, 1L, Double.NaN), key(1, 1, 4L, Double.NaN), key(1, 2, 3L, 7.0),
+      key(2, 0, 7L, Double.NaN), key(2, 1, 6L, 1.0))
+    for (order <- Seq(rows, rows.reverse); parts <- Seq(1, 3)) {
+      val df = order.toDF("g", "id", "score").repartition(parts)
+      val native = df.groupBy("g")
+        .agg(TopK.topKScored(col("id"), col("score"), 3).as("top"))
+        .select(col("g"), posexplode(col("top")))
+        .select(col("g"), col("pos"), col("col.id"), col("col.score"))
+        .collect().map(r => key(r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSet
+      val typed = order.toDS().repartition(parts)
+        .groupByKey(_._1)
+        .mapValues { case (_, id, sc) => Scored(id, sc) }
+        .agg(TopK.topK(3).toColumn.name("top"))
+        .collect().toSeq
+        .flatMap { case (g, top) => top.zipWithIndex.map { case (t, i) => key(g, i, t.id, t.score) } }
+        .toSet
+      assert(native == want, s"native, parts=$parts")
+      assert(typed == want, s"typed, parts=$parts")
+    }
+  }
+
   test("TopKScoredAgg buffer round-trips through serialize/deserialize") {
     val agg = TopK.TopKScoredAgg(
       org.apache.spark.sql.classic.GraftColumnBridge.expression(
